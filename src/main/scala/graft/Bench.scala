@@ -390,13 +390,6 @@ object Bench {
       try {
         val oltp = graft.etl.Pipeline.runEtl1(spark,
           etlPaths.institutions, etlPaths.users, etlPaths.observationsDir)
-        // A3/A12 materialization boundary: the reference lands OLTP as real
-        // tables before EP2 reads them; without it every fact build would
-        // re-run the whole EP1 chain (3 facts × the author NLJ + priority
-        // resolution). cache() is the in-session stand-in for that handoff.
-        val hot = Seq("observations", "users", "user_institution",
-          "user_subscription", "institutions").map(oltp)
-        hot.foreach(_.cache())
         val dims = graft.olap.Dims.build(oltp)
         val facts = graft.olap.Facts.build(oltp, dims)
         // the 3 fact builds and 2 table exports are INDEPENDENT jobs — a

@@ -72,7 +72,9 @@ object GraphOps {
     * `sparkContext.setCheckpointDir` or `spark.graft.checkpoint.dir`) and
     * every round/layer state lands in the reliable checkpoint store
     * instead; the DEFAULT path is byte-for-byte the old localCheckpoint,
-    * so local benches are untouched. See SCALE.md "executor loss and
+    * so local benches are untouched. Reliable mode with neither directory
+    * set throws: a silent localCheckpoint fallback would give up exactly
+    * the durability the flag asked for. See SCALE.md "executor loss and
     * iterative state".
     */
   private[graft] def ckpt(df: DataFrame, eager: Boolean = true): DataFrame = {
@@ -83,8 +85,11 @@ object GraphOps {
       if (ss.sparkContext.getCheckpointDir.isEmpty)
         ss.conf.getOption("spark.graft.checkpoint.dir")
           .foreach(ss.sparkContext.setCheckpointDir)
-      if (ss.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
+      if (ss.sparkContext.getCheckpointDir.isEmpty)
+        throw new IllegalStateException(
+          "spark.graft.checkpoint.reliable=true but no checkpoint directory: " +
+            "set spark.graft.checkpoint.dir or call sparkContext.setCheckpointDir")
+      df.checkpoint(eager)
     } else df.localCheckpoint(eager)
   }
 

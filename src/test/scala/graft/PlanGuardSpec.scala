@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Bin, CaseWhen, Cast, DateDiff, DayOfMonth, DayOfWeek, EqualTo, ExprId, Expression, Hour, If, IntegralDivide, IsNotNull, LambdaFunction, Least, Length, Literal, Minute, Month, Multiply, Pmod, Quarter, Remainder, TimeWindow, TruncDate, TruncTimestamp, WeekDay, WeekOfYear, Year}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LocalRelation, LogicalPlan, OneRowRelation, Project, Range, SubqueryAlias, Filter => LFilter, Join => LJoin}
-import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, FilterExec, GlobalLimitExec, LocalLimitExec, ProjectExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, FilterExec, GlobalLimitExec, LocalLimitExec, LogicalRDD, ProjectExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -473,5 +473,36 @@ class PlanGuardSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-planguard")
     val stg = graft.etl.Ingest.stageObservations(spark, graft.etl.DopiFixture.write(dir))
     assert(stg.queryExecution.sparkPlan.collect { case w: WindowExec => w }.isEmpty)
+  }
+
+  /** EP1 over a small generated fixture, then the EP2 frames over it. */
+  private lazy val etl = {
+    val paths = graft.etl.EtlFixture.write(Files.createTempDirectory("graft-planguard-etl"), 300)
+    val oltp = graft.etl.Pipeline.runEtl1(spark,
+      paths.institutions, paths.users, paths.observationsDir)
+    val dims = graft.olap.Dims.build(oltp)
+    (oltp, dims ++ graft.olap.Facts.build(oltp, dims))
+  }
+
+  test("every table runEtl1 returns is a lineage leaf: EP2 plans scan no file") {
+    val (oltp, ep2) = etl
+    oltp.foreach { case (name, df) =>
+      val leaves = df.queryExecution.analyzed.collectLeaves()
+      assert(leaves.size === 1 &&
+        leaves.forall { case _: LogicalRDD | _: LocalRelation => true; case _ => false },
+        s"$name is not a leaf over its materialized rows: $leaves")
+    }
+    ep2.foreach { case (name, df) =>
+      assert(df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }.isEmpty,
+        s"$name re-reads EP1's input files")
+    }
+  }
+
+  test("EP2 (Dims.build + Facts.build) plans no unpartitioned window") {
+    etl._2.foreach { case (name, df) =>
+      val global = df.queryExecution.sparkPlan.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w }
+      assert(global.isEmpty, s"$name plans a single-task global window")
+    }
   }
 }

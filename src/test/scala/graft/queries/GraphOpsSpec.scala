@@ -618,6 +618,20 @@ class GraphOpsSpec extends SparkSpec {
     assert(prs.head <= GraphOps.PrScale * 2)
   }
 
+  /** Runs `body` in reliable-checkpoint mode with the shared session's
+    * sticky checkpoint directory cleared, then restores both. */
+  private def reliableMode[T](body: => T): T = {
+    val sc = spark.sparkContext
+    val priorDir = sc.getCheckpointDir
+    org.apache.spark.CheckpointDirs.set(sc, None)
+    spark.conf.set("spark.graft.checkpoint.reliable", "true")
+    try body finally {
+      spark.conf.unset("spark.graft.checkpoint.reliable")
+      spark.conf.unset("spark.graft.checkpoint.dir")
+      org.apache.spark.CheckpointDirs.set(sc, priorDir)
+    }
+  }
+
   test("reliable-checkpoint seam: louvain output identical under checkpoint()") {
     // the r16 ckpt seam (SCALE.md "executor loss and iterative state"):
     // spark.graft.checkpoint.reliable=true routes every iterative round's
@@ -628,17 +642,21 @@ class GraphOpsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (4L, 5L), (4L, 6L), (5L, 6L), (3L, 4L))
     val default = GraphOps.louvainFrom(rawOf(edges)).collect().toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set("spark.graft.checkpoint.reliable", "true")
-    spark.conf.set("spark.graft.checkpoint.dir", dir)
-    try {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    reliableMode {
+      spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
       val reliable = GraphOps.louvainFrom(rawOf(edges)).collect().toSeq
       assert(reliable === default)
       // the seam really switched: reliable checkpoint files were written
-      assert(java.nio.file.Files.list(java.nio.file.Paths.get(dir)).count() > 0)
-    } finally {
-      spark.conf.unset("spark.graft.checkpoint.reliable")
-      spark.conf.unset("spark.graft.checkpoint.dir")
+      val written = java.nio.file.Files.list(dir)
+      try assert(written.count() > 0) finally written.close()
+    }
+  }
+
+  test("reliable-checkpoint seam: no checkpoint directory fails fast") {
+    reliableMode {
+      val e = intercept[IllegalStateException](GraphOps.ckpt(spark.range(3).toDF()))
+      assert(e.getMessage.contains("spark.graft.checkpoint.dir"))
     }
   }
 }
