@@ -36,6 +36,14 @@ object Normalize {
     existing.unionAll(appended)
   }
 
+  /** The deterministic-keep policy: one row per `partitionBy` key, the
+    * first by `orderBy`. `dropDuplicates` keeps an arbitrary row, so a key
+    * with conflicting rows could surface a different survivor run to run. */
+  def keepFirst(df: DataFrame, partitionBy: Seq[Column], orderBy: Seq[Column]): DataFrame =
+    df.withColumn("rn", row_number().over(
+        Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)))
+      .filter(col("rn") === 1).drop("rn")
+
   /** Fresh dim from scratch: empty-existing upsertDim convenience. */
   def buildDim(incoming: DataFrame, idCol: String, keyCols: Seq[String]): DataFrame = {
     val w = Window.orderBy(keyCols.map(col): _*)

@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -104,11 +103,9 @@ object Observations {
           .when(col("observation_date").isNotNull &&
             col("observation_date") < col("start_date"), 3)
           .otherwise(4))
-    val w = Window.partitionBy(col("raw_data_id"))
-      .orderBy(col("affiliation_priority"), col("start_date"), col("user_institution_id"))
-    cand.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "ui_user_id")
+    Normalize.keepFirst(cand, Seq(col("raw_data_id")),
+        Seq(col("affiliation_priority"), col("start_date"), col("user_institution_id")))
+      .drop("ui_user_id")
   }
 
   /** Final FK resolution + typing (04_ETL1_part3.sql:418-454). Faithful to

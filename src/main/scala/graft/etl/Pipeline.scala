@@ -108,27 +108,22 @@ object Pipeline {
     // the lowest city_id — same outcome whenever names are unique,
     // deterministic when they are not.
     def cityByName(cities: DataFrame): DataFrame =
-      cities.withColumn("rn", row_number().over(
-        Window.partitionBy(col("city_name")).orderBy(col("city_id"))))
-        .filter(col("rn") === 1).drop("rn")
+      Normalize.keepFirst(cities, Seq(col("city_name")), Seq(col("city_id")))
 
     val counties1 = land("counties1",
       Normalize.buildDim(countyRows(instValid, countries1), "county_id", countyKey))
     val cities1 = land("cities1",
       Normalize.buildDim(cityRows(instValid, counties1), "city_id", cityKey))
 
-    val institutions = land("institutions", Normalize.upsertDim(
+    // upsertDim keys on (name, city); the reference keys on name alone:
+    // keep the lowest id per name
+    val institutions = land("institutions", Normalize.keepFirst(Normalize.upsertDim(
       seedInstitutions(spark),
       instValid.join(cityByName(cities1), instValid("city") === col("city_name"), "left")
         .filter(col("institution").isNotNull)
         .select(col("institution").as("institution_name"), col("city_id")),
-      "institution_id", Seq("institution_name", "city_id"))
-      // upsertDim keys on (name, city); the reference keys on name alone.
-      // Deterministic keep (lowest id) — dropDuplicates picks an arbitrary
-      // row, which would make surrogate↔city assignment vary run to run.
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("institution_name")).orderBy(col("institution_id"))))
-      .filter(col("rn") === 1).drop("rn"))
+      "institution_id", Seq("institution_name", "city_id")),
+      Seq(col("institution_name")), Seq(col("institution_id"))))
 
     // ---- part 2: users + SCD2 (03_ETL1_part2.sql) -------------------------
     val stgUsers = Ingest.stageUsers(spark, usersCsv)
@@ -150,11 +145,9 @@ object Pipeline {
     // DISTINCT ON (username) ORDER BY username, join_date → earliest row
     // wins; email/city complete the tiebreak so two staging rows tied on
     // (join_date, full_name) cannot flip the surviving email between runs
-    // (the same deterministic-keep policy as cities/institutions/species)
-    val userW = Window.partitionBy(col("username"))
-      .orderBy(col("join_date"), col("full_name"), col("email"), col("city"))
     val users = land("users", Normalize.nameSplit(
-      usersValid.withColumn("rn", row_number().over(userW)).filter(col("rn") === 1))
+      Normalize.keepFirst(usersValid, Seq(col("username")),
+        Seq(col("join_date"), col("full_name"), col("email"), col("city"))))
       .join(cityByName(cities), usersValid("city") === col("city_name"), "left")
       .select(col("username"), col("email"), col("first_name_or_initials"),
         col("last_name"), col("city_id"),
@@ -202,14 +195,9 @@ object Pipeline {
     val (obsValid0, invalidObservations) = Validate.validateObservations(stgObs)
     val obsValid = Observations.manualCodeFixes(obsValid0).cache()
 
-    // One row per species_name, keeping the LOWEST nbn_code (nulls last):
-    // dropDuplicates keeps an arbitrary row, so a species with conflicting
-    // codes could surface a different nbn_code run to run — same
-    // deterministic-keep policy as institutions/cities above.
+    // One row per species_name, keeping the LOWEST nbn_code (nulls last)
     def speciesDedup(df: DataFrame): DataFrame =
-      df.withColumn("rn", row_number().over(
-        Window.partitionBy(col("species_name")).orderBy(col("nbn_code").asc_nulls_last)))
-        .filter(col("rn") === 1).drop("rn")
+      Normalize.keepFirst(df, Seq(col("species_name")), Seq(col("nbn_code").asc_nulls_last))
 
     val plantSpecies = land("plant_species", Normalize.buildDim(
       speciesDedup(obsValid.filter(col("plant_species").isNotNull)

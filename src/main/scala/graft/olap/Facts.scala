@@ -1,7 +1,6 @@
 package graft.olap
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** EP2 part 2 (08_ETL2_part2.sql): the three fact builds. The reference's
@@ -60,14 +59,11 @@ object Facts {
     // start_date (a degenerate but loadable staging shape) would BOTH
     // match the se_start = join_date fallback and double every downstream
     // measure — keep the lowest surrogate deterministically
-    val seW = Window.partitionBy(col("se_user"), col("se_start"))
-      .orderBy(col("se_sk"))
-    val subEarliest = dims("dim_subscription_type").select(
-      col("user_id_bk").as("se_user"), col("start_date").as("se_start"),
-      col("subscription_type_sk").as("se_sk"))
-      .withColumn("se_rn", row_number().over(seW))
-      .filter(col("se_rn") === 1)
-      .drop("se_rn")
+    val subEarliest = graft.etl.Normalize.keepFirst(
+      dims("dim_subscription_type").select(
+        col("user_id_bk").as("se_user"), col("start_date").as("se_start"),
+        col("subscription_type_sk").as("se_sk")),
+      Seq(col("se_user"), col("se_start")), Seq(col("se_sk")))
     ob
       .join(oltp("user_institution").select(col("user_institution_id"),
         col("user_id"), col("institution_id"), col("start_date").as("ui_start")),

@@ -10,7 +10,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * other Spark-native libraries (Delta, Sedona, Frameless all ship classes in
   * the `org.apache.spark.sql` namespace for the same reason) — this one-file
   * shim lives inside the package to re-expose exactly the two converters.
-  * Nothing else in graft touches Spark internals.
+  * Apart from [[ListenerShim]], nothing else in graft touches Spark
+  * internals.
   */
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -1,34 +1,25 @@
 #!/bin/bash
-# Round-close ritual, mechanized (ROUNDLOG item 8 + VERDICT r7 #7):
+# Round-close ritual, mechanized:
 #   1. compile
 #   2. correctness sweep: every SparkEntry entry vs the DuckDB oracle at
 #      sf0.001 / sf0.01 / sf0.1
-#   3. controlled bench at sf0.1 (quiet box assumed — check cal_spread!)
-#   4. benchgate vs the previous round's artifact (auto-adjudicating)
-#   5. full sbt test
-# Any failure stops the ritual with a nonzero exit. Artifacts land in
-# $OUT_DIR (default /tmp/roundcheck).
+#   3. bench at sf0.1; the run must plan no unpartitioned window
+#   4. full sbt test
+# A failing compile, oracle check or test suite stops the ritual with a
+# nonzero exit. Unpartitioned windows in step 3 do not stop it: step 4
+# still runs, and the script exits nonzero at the end.
+# Artifacts land in $OUT_DIR (default /tmp/roundcheck).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 OUT_DIR="${OUT_DIR:-/tmp/roundcheck}"
-# The benchgate reference is the COMMITTED quiet-close baseline (VERDICT
-# r12 #1: the repo-root BENCH_FULL.json was .gitignore'd AND overwritten
-# by a contaminated driver run — gating against an untracked file means
-# gating against phantoms on a dirty box and nothing on a fresh clone).
-# Refresh it via the CODIFIED seeding rule (VERDICT r13 #4 — never a raw
-# cp, which re-mints lucky-fast sub-second seeds):
-#   python3 tools/benchgate.py $OUT_DIR/BENCH_FULL.json BENCH_BASELINE.json \
-#     --seed-out BENCH_BASELINE.json   # refuses cal spread > 1.15
-#   git add BENCH_BASELINE.json && git commit
-PREV_BENCH="${PREV_BENCH:-BENCH_BASELINE.json}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
 mkdir -p "$OUT_DIR"
 
-echo "== [1/5] compile"
+echo "== [1/4] compile"
 sbt -batch compile > "$OUT_DIR/compile.log" 2>&1
 
-echo "== [2/5] correctness sweep (3 SFs)"
+echo "== [2/4] correctness sweep (3 SFs)"
 for sf in 0.001 0.01 0.1; do
   SPARK_GRAFT_CPUS="$CPUS" sbt -batch \
     "runMain graft.Verify /root/testdata/sf$sf $OUT_DIR/verify_$sf" \
@@ -38,52 +29,26 @@ for sf in 0.001 0.01 0.1; do
   grep -q ", 0 failed" "$OUT_DIR/check_$sf.txt"
 done
 
-echo "== [3/5] controlled bench at sf0.1 (local[$CPUS])"
+echo "== [3/4] bench at sf0.1 (local[$CPUS])"
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_BENCH_OUT="$OUT_DIR/BENCH_FULL.json" \
   sbt -batch "runMain graft.Bench" > "$OUT_DIR/bench.log" 2>&1
-WINDOWS=$(grep -c "WindowExec: No Partition Defined" "$OUT_DIR/bench.log" || true)
-[ "$WINDOWS" = "0" ] || { echo "unpartitioned window detected"; exit 1; }
+# Bench keeps Spark's window planner at WARN, so every window planned
+# without a partition key logs this line
+WINDOWS=$(grep -c "No Partition Defined for Window operation" "$OUT_DIR/bench.log" || true)
+WINDOW_RC=0
+if [ "$WINDOWS" != "0" ]; then
+  echo "unpartitioned window planned $WINDOWS time(s); see $OUT_DIR/bench.log"
+  WINDOW_RC=1
+fi
 grep '"metric"' "$OUT_DIR/bench.log" | tail -1
 
-echo "== [4/5] benchgate vs $PREV_BENCH"
-# benchgate exits nonzero when any leg stays flagged after adjudication —
-# that is a REPORT, not a reason to skip the test suite (it killed step 5
-# via set -e twice in round 12); record the gate result, keep going, and
-# surface it in the script's own exit code at the end
-GATE_RC=0
-# refuse to gate against an UNTRACKED reference: an untracked file is
-# whatever the last (possibly contaminated) run left on disk, not a
-# reviewed baseline — the exact r12 failure mode (VERDICT r12 #1)
-if [ -f "$PREV_BENCH" ] && ! git ls-files --error-unmatch "$PREV_BENCH" >/dev/null 2>&1; then
-  echo "FATAL: $PREV_BENCH exists but is not git-tracked — commit a quiet"
-  echo "close as the baseline (cp \$OUT_DIR/BENCH_FULL.json BENCH_BASELINE.json"
-  echo "&& git add) or point PREV_BENCH at a tracked artifact."
-  exit 1
-fi
-if [ -f "$PREV_BENCH" ]; then
-  # --patch: each flagged leg's isolated (quiet-epoch) re-run replaces its
-  # contaminated median in the round artifact, with provenance under
-  # 'patched' — so the recorded medians are clean without re-running all legs
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$CPUS" \
-    BENCHGATE_OUT="$OUT_DIR/benchgate_report.json" \
-    python3 tools/benchgate.py "$OUT_DIR/BENCH_FULL.json" "$PREV_BENCH" \
-      --rerun --patch || GATE_RC=$?
-  [ "$GATE_RC" = "0" ] || echo "(benchgate flagged legs — rc $GATE_RC; see report)"
-else
-  echo "(no committed baseline at $PREV_BENCH — skipping gate; seed one"
-  echo " from THIS run if its calibration is quiet: cp $OUT_DIR/BENCH_FULL.json"
-  echo " $PREV_BENCH && git add $PREV_BENCH)"
-fi
-
-echo "== [5/5] full sbt test"
+echo "== [4/4] full sbt test"
 TEST_RC=0
 sbt -batch test > "$OUT_DIR/test.log" 2>&1 || TEST_RC=$?
-# Hard-fail on truncated evidence (VERDICT r14 #3): the r14 close shipped
-# a test.log that ended in a SparkContext-shutdown cascade mid-suite and
-# was still recorded as "ran to completion". A close is only valid when
-# sbt exited 0 AND the log carries the aggregate full-suite summary with
-# zero failures AND zero aborted suites — anything less is not evidence.
+# A close is only valid when sbt exited 0 AND the log carries the
+# aggregate full-suite summary with zero failures AND zero aborted suites:
+# a log that ends mid-suite is not evidence.
 TEST_SUMMARY=$(grep -E "Tests: succeeded [0-9]+, failed 0, canceled 0" \
   "$OUT_DIR/test.log" | tail -1 || true)
 SUITES_OK=$(grep -E "Suites: completed [0-9]+, aborted 0" \
@@ -98,5 +63,5 @@ fi
 echo "$TEST_SUMMARY"
 echo "$SUITES_OK"
 
-echo "== roundcheck complete; artifacts in $OUT_DIR (benchgate rc $GATE_RC)"
-exit "$GATE_RC"
+echo "== roundcheck complete; artifacts in $OUT_DIR (window rc $WINDOW_RC)"
+exit "$WINDOW_RC"
